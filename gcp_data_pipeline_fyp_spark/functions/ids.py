@@ -32,12 +32,6 @@ def stable_event_id(*key_cols: Column | str) -> Column:
     return F.conv(F.substring(F.md5(joined), 1, 15), 16, 10).cast("long")
 
 
-def stable_event_id_sql(*key_sql: str) -> str:
-    """The DuckDB-equivalent SQL text for `stable_event_id` (oracle parity)."""
-    joined = ", ".join(f"cast({k} as varchar)" for k in key_sql)
-    return f"cast(concat('0x', substr(md5(concat_ws('_', {joined})), 1, 15)) as bigint)"
-
-
 def fast_event_id(*key_cols: Column | str) -> Column:
     """xxhash64 id, non-negative; Spark-internal fast path."""
     cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]

@@ -516,10 +516,19 @@ def build_dsir_profiles(
     count-where-predicate per bucket (rows with 0 dropped, matching
     the separate-fit output exactly) is the target profile. Exactly
     one of `target` / `target_filter` must be given; the two-frame
-    form remains for targets that are not a slice of `raw`."""
+    form remains for targets that are not a slice of `raw`, and for
+    a target tokenized from its own `target_text_col` (combining that
+    with `target_filter` raises)."""
     if (target is None) == (target_filter is None):
         raise ValueError(
             "build_dsir_profiles: pass exactly one of target / target_filter"
+        )
+    if target_filter is not None and target_text_col is not None:
+        # the fused pass tokenizes `text_col` once for both profiles;
+        # a separate target column needs the two-frame form
+        raise ValueError(
+            "build_dsir_profiles: target_text_col needs a target frame; "
+            "with target_filter both profiles read text_col"
         )
     if target_filter is not None:
         flagged = raw.withColumn(

@@ -14,6 +14,43 @@ restartable from the checkpoint.
 answers the DuckDB-checked `windowed_counts` probe — one definition,
 two execution modes, which is the point of Structured Streaming.
 
+Every `stream_*` op is one fold over a file-source feed. `_feed` builds
+the feed (headered CSV, JSONL or parquet; optional
+`maxFilesPerTrigger`; the watermark + `dropDuplicatesWithinWatermark`
+step for ops that dedup by id). `_run_fold` runs it through
+`foreachBatch` under `Trigger.AvailableNow`: process everything
+available, then stop; a re-run resumes from the checkpoint. Per
+micro-batch it applies the op's `prepare` step (the in-batch dedup,
+persisted when the fold reads the batch more than once), skips an
+empty batch, folds, and unpersists a cached prepared frame in a
+`finally`. The skip matters: AvailableNow + a stateful dedup runs a
+trailing data-less batch to flush state, and folding it would append
+spurious all-zero report rows (tripping row_count lower bounds) or
+rewrite a table for nothing.
+
+foreachBatch is at-least-once: after a crash the last batch is
+delivered again. Two replay guards make the re-delivery a no-op:
+
+- Append ledgers. `_append_once` stamps the batch id on the rows and
+  appends them only if the table has no row with that id yet
+  (`batch_already_appended`, which states its commit-protocol
+  assumption). Each append-only table is its OWN ledger: guarding one
+  append with another table's probe leaves a crash window between the
+  two appends that duplicates rows on replay.
+- The state mark. Count/sum folds are distributive but NOT idempotent.
+  `_promote_state` stamps `(__stream_id, __last_batch_id)` (the
+  checkpoint's query id, the batch id) on every state row in the SAME
+  staging+swap as the state, so state and mark never disagree, even
+  across a crash mid-promotion. `_prior_state` reads the mark back:
+  within one checkpoint lineage foreachBatch re-delivers only the LAST
+  batch, so `batch_id <= mark` identifies every already-merged
+  delivery. Batch ids from a DIFFERENT checkpoint (deleted/recreated)
+  are NOT comparable — the source renumbers and re-delivers
+  everything, so the id guard would both double-count replayed files
+  and DROP files that arrived after the old mark. That case raises:
+  rebuild the state table under the new checkpoint, or keep the
+  original checkpoint directory.
+
 Scale notes: the file source scales by listing (use
 `maxFilesPerTrigger` to bound batch size); dedup state is bounded by
 the watermark horizon; `foreachBatch` runs the merge as a normal batch
@@ -24,7 +61,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -37,11 +74,9 @@ from gcp_data_pipeline_fyp_spark.sources.tables import Warehouse
 
 def checkpoint_stream_id(checkpoint_dir: str) -> str:
     """The stream's identity from its checkpoint metadata — the key
-    every replay-guarded ingest stamps into its state so a state
+    the state mark (`_promote_state`) stamps into its state so a state
     table from a DIFFERENT checkpoint lineage (whose batch ids are
-    not comparable) raises instead of silently double-counting.
-    Shared helper: the per-ingest copies of this logic had started
-    to drift."""
+    not comparable) raises instead of silently double-counting."""
     import json as _json
     import os as _os
 
@@ -83,6 +118,157 @@ def batch_already_appended(
     )
 
 
+def _feed(
+    spark: SparkSession,
+    input_dir: str,
+    schema_ddl: str,
+    feed_format: str = "csv",
+    max_files_per_trigger: int | None = None,
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+    not_null_col: str | None = None,
+    ts_col: str | None = None,
+    watermark: str | None = None,
+    dedup_cols: list[str] | None = None,
+) -> DataFrame:
+    """The file-source stream a `stream_*` op folds over.
+
+    `feed_format` is "csv" (headered), "jsonl" or "parquet";
+    `transform` runs on the parsed rows; `not_null_col` drops rows
+    whose id is NULL; with `dedup_cols` set, rows are deduplicated on
+    those columns within `watermark` of `ts_col`."""
+    reader = spark.readStream.schema(schema_ddl)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    if feed_format == "csv":
+        feed = reader.option("header", True).csv(input_dir)
+    elif feed_format == "jsonl":
+        feed = reader.json(input_dir)
+    elif feed_format == "parquet":
+        feed = reader.parquet(input_dir)
+    else:
+        raise ValueError(f"unknown feed_format: {feed_format!r}")
+    if transform is not None:
+        feed = transform(feed)
+    if not_null_col is not None:
+        feed = feed.filter(F.col(not_null_col).isNotNull())
+    if dedup_cols is not None:
+        feed = feed.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+            dedup_cols
+        )
+    return feed
+
+
+def _run_fold(
+    feed: DataFrame,
+    fold: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    prepare: Callable[[DataFrame], DataFrame] | None = None,
+) -> StreamingQuery:
+    """Start `fold(batch, batch_id)` over every micro-batch of `feed`
+    that is non-empty after `prepare` (module docstring)."""
+
+    def _batch(batch: DataFrame, batch_id: int) -> None:
+        if prepare is not None:
+            batch = prepare(batch)
+        try:
+            if not batch.isEmpty():
+                fold(batch, batch_id)
+        finally:
+            if batch.is_cached:
+                batch.unpersist()
+
+    return (
+        feed.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _stamp(df: DataFrame, col: str, batch_id: int) -> DataFrame:
+    return df.withColumn(col, F.lit(batch_id).cast("long"))
+
+
+def _append_once(
+    wh: Warehouse, df: DataFrame, table: str, batch_id: int, col: str
+) -> None:
+    """Append `df` stamped with `batch_id` in `col` unless `table`
+    already holds that batch (the append ledger, module docstring)."""
+    if not batch_already_appended(wh, table, batch_id, col):
+        wh.append(_stamp(df, col, batch_id), table)
+
+
+def _prior_state(
+    wh: Warehouse, state_table: str, checkpoint_dir: str, batch_id: int
+) -> tuple[DataFrame | None, bool]:
+    """(state without its mark columns, already_merged) for `batch_id`,
+    or (None, False) when there is no state yet. Raises ValueError if
+    the state was built under another checkpoint lineage (the state
+    mark, module docstring)."""
+    if not wh.exists(state_table):
+        return None, False
+    sid = checkpoint_stream_id(checkpoint_dir)
+    prior = wh.read(state_table)
+    mark = prior.select(
+        F.max("__stream_id").alias("sid"),
+        F.max("__last_batch_id").alias("m"),
+    ).first()
+    if mark["sid"] is not None and mark["sid"] != sid:
+        raise ValueError(
+            f"state table {state_table!r} was built by stream "
+            f"{mark['sid']} but this checkpoint is {sid}: batch ids are "
+            "not comparable across checkpoints (every file re-delivers "
+            "under new numbering). Drop the state table to rebuild it "
+            "under this checkpoint, or restart from the original "
+            "checkpoint directory."
+        )
+    already_merged = mark["m"] is not None and batch_id <= mark["m"]
+    return prior.drop("__stream_id", "__last_batch_id"), already_merged
+
+
+def _promote_state(
+    wh: Warehouse,
+    state: DataFrame,
+    state_table: str,
+    checkpoint_dir: str,
+    batch_id: int,
+) -> None:
+    """Stamp the state mark on `state` and promote it to `state_table`
+    by staging + swap (module docstring)."""
+    staging = f"{state_table}__staging"
+    wh.overwrite(
+        state.withColumn(
+            "__stream_id", F.lit(checkpoint_stream_id(checkpoint_dir))
+        ).withColumn("__last_batch_id", F.lit(batch_id)),
+        staging,
+    )
+    wh.swap(staging, state_table)
+
+
+def _fold_counts(
+    wh: Warehouse,
+    state_table: str,
+    checkpoint_dir: str,
+    batch_id: int,
+    part: DataFrame,
+    keys: list[str],
+    col: str,
+) -> tuple[DataFrame, bool]:
+    """(cumulative per-key counts, already_merged) for a count state:
+    the batch's counts `part` summed into the prior counts, or the
+    prior counts unchanged when the batch was already merged."""
+    prior, already_merged = _prior_state(
+        wh, state_table, checkpoint_dir, batch_id
+    )
+    if prior is None:
+        return part, False
+    prior = prior.select(*keys, col)
+    if already_merged:
+        return prior, True
+    summed = prior.unionByName(part).groupBy(*keys).agg(F.sum(col).alias(col))
+    return summed, False
+
+
 def stream_ingest_available_now(
     spark: SparkSession,
     input_dir: str,
@@ -109,29 +295,17 @@ def stream_ingest_available_now(
     batch against a large table never rewrites the whole table — same
     discipline as the batch delta path (plans/delta.py).
     """
-    raw = (
-        spark.readStream.schema(schema_ddl)
-        .option("header", True)
-        .csv(input_dir)
+    feed = _feed(
+        spark, input_dir, schema_ddl, transform=transform,
+        ts_col=ts_col, watermark=watermark, dedup_cols=event_id_cols,
     )
-    if transform is not None:
-        raw = transform(raw)
-    deduped = (
-        raw.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(event_id_cols)
-    )
-
-    def _merge_batch(batch: DataFrame, batch_id: int) -> None:
-        _merge_into(
-            wh, table, batch.dropDuplicates(event_id_cols), event_id_cols,
-            partition_col,
-        )
-
-    return (
-        deduped.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _run_fold(
+        feed,
+        lambda batch, _: _merge_into(
+            wh, table, batch, event_id_cols, partition_col
+        ),
+        checkpoint_dir,
+        prepare=lambda batch: batch.dropDuplicates(event_id_cols),
     )
 
 
@@ -144,7 +318,7 @@ def _merge_into(
 ) -> None:
     """MERGE one (already in-batch-deduplicated) micro-batch into `table`.
 
-    Every write below carries a REBALANCE hint (guide §6 / §2.2): the
+    The merge writes carry a REBALANCE hint (guide §6 / §2.2): the
     merge output's partition count otherwise inherits
     `spark.sql.shuffle.partitions` (sized to CORES), so each batch of a
     32-core run wrote 4x the files of an 8-core run for identical data
@@ -153,7 +327,10 @@ def _merge_into(
     REBALANCE makes AQE size the write partitions by bytes
     (advisoryPartitionSizeInBytes), so file count follows DATA SIZE at
     any scale: one file per small micro-batch locally, ~64 MB files on
-    a fact-scale partition-scoped merge — never one file per core."""
+    a fact-scale partition-scoped merge — never one file per core.
+    Partitioned writes, the first one included, shuffle BY the
+    partition column, so each partition value lands in few write tasks
+    instead of one file per task in every partition dir."""
     part_cols = [partition_col] if partition_col else None
     staging = f"{table}__staging"
     if wh.exists(table):
@@ -175,8 +352,26 @@ def _merge_into(
             merged = merge_upsert(base, batch.select(*base.columns), event_id_cols)
             wh.overwrite(merged.hint("rebalance"), staging)
             wh.swap(staging, table)
+    elif partition_col:
+        # not a rebalance hint: `batch` belongs to the stream's session,
+        # where Spark turns AQE off for stateful queries and so drops
+        # the hint (the merged frames above belong to the warehouse's
+        # session, where AQE applies it)
+        wh.overwrite(
+            batch.repartition(partition_col), table, partition_cols=part_cols
+        )
     else:
-        wh.overwrite(batch.hint("rebalance"), table, partition_cols=part_cols)
+        wh.overwrite(batch.hint("rebalance"), table)
+
+
+def _any_violated(rules: list) -> Column:
+    """True where a row breaks any ROW-LEVEL rule (NULL counts as
+    not violated)."""
+    violated = F.lit(False)
+    for r in rules:
+        if r.violated is not None:
+            violated = violated | F.coalesce(r.violated, F.lit(False))
+    return violated
 
 
 def stream_validated_ingest(
@@ -209,6 +404,9 @@ def stream_validated_ingest(
       pattern, reference S10) instead of silently vanishing;
     - only clean rows merge into `table`.
 
+    The report and the quarantine are each their own append ledger
+    (module docstring); the MERGE is naturally idempotent on replay.
+
     Aggregate-shaped rules (unique / row_count / referential) can't
     name individual rows; they gate via the report, not the split.
     `zonemap_cols` keeps the table's skipping index (operators/
@@ -218,89 +416,57 @@ def stream_validated_ingest(
     batch, and the merge is the partition-scoped batch path — nothing
     here holds streaming state beyond the dedup watermark.
     """
-    from pyspark.sql import functions as SF
-
     from gcp_data_pipeline_fyp_spark.operators.expectations import (
         expectations_report,
     )
 
-    raw = (
-        spark.readStream.schema(schema_ddl)
-        .option("header", True)
-        .csv(input_dir)
-    )
-    deduped = (
-        raw.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(event_id_cols)
-    )
-    row_rules = [r for r in rules if r.violated is not None]
+    has_row_rules = any(r.violated is not None for r in rules)
 
     def _validate_and_merge(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.dropDuplicates(event_id_cols).persist()
-        try:
-            # AvailableNow + stateful dedup runs a trailing data-less
-            # batch to flush state; logging it would append spurious
-            # all-zero report rows (and trip row_count lower bounds)
-            if batch.isEmpty():
-                return
-            # foreachBatch is at-least-once: on a replay after a
-            # mid-batch failure the MERGE is naturally idempotent, but
-            # the appends are not — each append-only table is its OWN
-            # replay ledger (probe its batch_id before appending).
-            # Guarding quarantine with the report ledger would leave a
-            # crash window between the two appends that duplicates
-            # dead-letter rows on replay.
-            def _batch_seen(t: str) -> bool:
-                return batch_already_appended(wh, t, batch_id, col="batch_id")
-
-            already_logged = _batch_seen(report_table)
-            clean = batch
-            if row_rules:
-                violated = SF.lit(False)
-                for r in row_rules:
-                    violated = violated | SF.coalesce(r.violated, SF.lit(False))
-                if quarantine_table is not None and not _batch_seen(
-                    quarantine_table
-                ):
-                    # rebalance: dead-letter appends are a (usually
-                    # tiny) filtered slice of the batch — without the
-                    # clamp each append lands one file PER PARTITION
-                    # of the batch (cores-sized), decaying the
-                    # quarantine into core-count x batches files
-                    wh.append(
-                        batch.filter(violated)
-                        .withColumn(
-                            "batch_id", SF.lit(batch_id).cast("long")
-                        )
-                        .hint("rebalance"),
-                        quarantine_table,
-                    )
-                clean = batch.filter(~violated)
-            if not already_logged:
-                report = expectations_report(batch, rules).withColumn(
-                    "batch_id", SF.lit(batch_id).cast("long")
+        already_logged = batch_already_appended(
+            wh, report_table, batch_id, col="batch_id"
+        )
+        clean = batch
+        if has_row_rules:
+            violated = _any_violated(rules)
+            if quarantine_table is not None:
+                # rebalance: dead-letter appends are a (usually
+                # tiny) filtered slice of the batch — without the
+                # clamp each append lands one file PER PARTITION
+                # of the batch (cores-sized), decaying the
+                # quarantine into core-count x batches files
+                _append_once(
+                    wh, batch.filter(violated).hint("rebalance"),
+                    quarantine_table, batch_id, "batch_id",
                 )
-                wh.append(report, report_table)
-            _merge_into(wh, table, clean, event_id_cols, partition_col)
-            if zonemap_cols:
-                # keep the skipping index fresh as the stream appends:
-                # stats only the batch's new files (operators/zonemap.
-                # refresh_zonemap); entries for files the merge rewrote
-                # go stale and are ignored by prune_files, so pruned
-                # reads stay exact between (occasional) full rebuilds
-                from gcp_data_pipeline_fyp_spark.operators.zonemap import (
-                    refresh_zonemap,
-                )
+            clean = batch.filter(~violated)
+        if not already_logged:
+            wh.append(
+                _stamp(expectations_report(batch, rules), "batch_id", batch_id),
+                report_table,
+            )
+        _merge_into(wh, table, clean, event_id_cols, partition_col)
+        if zonemap_cols:
+            # keep the skipping index fresh as the stream appends:
+            # stats only the batch's new files (operators/zonemap.
+            # refresh_zonemap); entries for files the merge rewrote
+            # go stale and are ignored by prune_files, so pruned
+            # reads stay exact between (occasional) full rebuilds
+            from gcp_data_pipeline_fyp_spark.operators.zonemap import (
+                refresh_zonemap,
+            )
 
-                refresh_zonemap(wh, table, zonemap_cols)
-        finally:
-            batch.unpersist()
+            refresh_zonemap(wh, table, zonemap_cols)
 
-    return (
-        deduped.writeStream.foreachBatch(_validate_and_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    feed = _feed(
+        spark, input_dir, schema_ddl,
+        ts_col=ts_col, watermark=watermark, dedup_cols=event_id_cols,
+    )
+    return _run_fold(
+        feed,
+        _validate_and_merge,
+        checkpoint_dir,
+        prepare=lambda batch: batch.dropDuplicates(event_id_cols).persist(),
     )
 
 
@@ -347,14 +513,9 @@ def reprocess_quarantine(
     before the merge (the target table never carries it). Batch-sized
     work only: one filter split + the idempotent partition-scoped merge.
     """
-    from pyspark.sql import functions as SF
-
     q = wh.read(quarantine_table).persist()
     try:
-        row_rules = [r for r in rules if r.violated is not None]
-        violated = SF.lit(False)
-        for r in row_rules:
-            violated = violated | SF.coalesce(r.violated, SF.lit(False))
+        violated = _any_violated(rules)
         clean = q.filter(~violated).drop("batch_id")
         still_bad = q.filter(violated)
         released = clean.count()
@@ -408,17 +569,16 @@ def stream_scored_ingest(
       validated against stored metadata otherwise;
     - 'drop' and 'empty' docs append to `rejects_table` (if set) WITH
       their score and batch id — the quality dead-letter, auditable
-      and reprocessable when the model is retrained. The append is
-      guarded by its own batch_id probe of the rejects table, so a
-      replayed batch never duplicates dead-letter rows;
+      and reprocessable when the model is retrained;
     - a per-batch summary (n_docs / n_keep / n_drop / n_empty) appends
-      to `score_log_table` — the feed-quality time series and replay
-      ledger. Each append is idempotent at BATCH granularity (probe
-      then write); a crash strictly inside one append can still leave
-      that one table partially written — the same at-least-once caveat
-      `stream_validated_ingest` documents — but ordering between the
-      two appends no longer matters;
+      to `score_log_table` — the feed-quality time series;
     - keepers merge via the staging-swap batch path.
+
+    The rejects and the score log are each their own append ledger
+    (module docstring), so ordering between the two appends does not
+    matter; a crash strictly inside one append can still leave that
+    one table partially written (the commit-protocol caveat of
+    `batch_already_appended`).
 
     Scale: scoring is one feature explode + broadcast join + id-keyed
     aggregation per batch; no streaming state beyond the dedup
@@ -439,78 +599,49 @@ def stream_scored_ingest(
         weights, n_buckets, None, None
     )
 
-    def _batch_seen(table: str, batch_id: int) -> bool:
-        return batch_already_appended(wh, table, batch_id, col="batch_id")
-
-    raw = (
-        spark.readStream.schema(schema_ddl)
-        .option("header", True)
-        .csv(input_dir)
-    )
-    deduped = (
-        raw.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark([id_col])
-    )
-
     def _score_and_merge(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.dropDuplicates([id_col]).persist()
-        try:
-            if batch.isEmpty():
-                return
-            already_logged = _batch_seen(score_log_table, batch_id)
-            feats = bucketed_features(
-                batch, [id_col], text_col, rb_buckets, rb_bigrams, rb_seed
-            )
-            scored = score_from_buckets(
-                feats, id_col, weights, batch.select(id_col),
-                threshold_micro,
-            ).persist()
-            try:
-                _route_batch(scored, batch, batch_id, already_logged)
-            finally:
-                scored.unpersist()
-        finally:
-            batch.unpersist()
-
-    def _route_batch(
-        scored: DataFrame, batch: DataFrame, batch_id: int, already_logged: bool
-    ) -> None:
-        # rejects idempotency is probed on the rejects table ITSELF
-        # (not the ledger) so replay after a crash between the two
-        # appends cannot duplicate dead-letter rows
-        if rejects_table is not None and not _batch_seen(rejects_table, batch_id):
-            rejected = batch.join(
-                scored.filter(F.col("label") != "keep"), id_col
-            ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-            wh.append(rejected, rejects_table)
-        if not already_logged:
-            summary = (
-                scored.agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.sum((F.col("label") == "keep").cast("long")).alias(
-                        "n_keep"
-                    ),
-                    F.sum((F.col("label") == "drop").cast("long")).alias(
-                        "n_drop"
-                    ),
-                    F.sum((F.col("label") == "empty").cast("long")).alias(
-                        "n_empty"
-                    ),
-                ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-            )
-            wh.append(summary, score_log_table)
-        keep = batch.join(
-            scored.filter(F.col("label") == "keep").select(id_col), id_col,
-            "left_semi",
+        already_logged = batch_already_appended(
+            wh, score_log_table, batch_id, col="batch_id"
         )
-        if not keep.isEmpty():
-            _merge_into(wh, table, keep, [id_col], partition_col)
+        feats = bucketed_features(
+            batch, [id_col], text_col, rb_buckets, rb_bigrams, rb_seed
+        )
+        scored = score_from_buckets(
+            feats, id_col, weights, batch.select(id_col), threshold_micro,
+        ).persist()
+        try:
+            if rejects_table is not None:
+                _append_once(
+                    wh, batch.join(scored.filter(F.col("label") != "keep"), id_col),
+                    rejects_table, batch_id, "batch_id",
+                )
+            if not already_logged:
+                summary = scored.agg(
+                    F.count(F.lit(1)).alias("n_docs"),
+                    *[
+                        F.sum((F.col("label") == k).cast("long")).alias(f"n_{k}")
+                        for k in ("keep", "drop", "empty")
+                    ],
+                )
+                wh.append(_stamp(summary, "batch_id", batch_id), score_log_table)
+            keep = batch.join(
+                scored.filter(F.col("label") == "keep").select(id_col), id_col,
+                "left_semi",
+            )
+            if not keep.isEmpty():
+                _merge_into(wh, table, keep, [id_col], partition_col)
+        finally:
+            scored.unpersist()
 
-    return (
-        deduped.writeStream.foreachBatch(_score_and_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    feed = _feed(
+        spark, input_dir, schema_ddl,
+        ts_col=ts_col, watermark=watermark, dedup_cols=[id_col],
+    )
+    return _run_fold(
+        feed,
+        _score_and_merge,
+        checkpoint_dir,
+        prepare=lambda batch: batch.dropDuplicates([id_col]).persist(),
     )
 
 
@@ -554,51 +685,34 @@ def stream_dedup_ingest(
     anything corpus-sized is the digest index (16 bytes/doc, ~1/10^4
     of corpus bytes)."""
     from gcp_data_pipeline_fyp_spark.operators.dedup import (
+        _content_digest,
         exact_dedup,
         incremental_dedup_indexed,
     )
 
-    raw = (
-        spark.readStream.schema(schema_ddl)
-        .option("header", True)
-        .csv(input_dir)
-    )
-    deduped = (
-        raw.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark([id_col])
-    )
-
     def _dedup_and_append(batch: DataFrame, batch_id: int) -> None:
-        batch = exact_dedup(
+        fresh = incremental_dedup_indexed(
+            wh, batch, key_cols, index_name, update_index=False
+        ).localCheckpoint()
+        if fresh.isEmpty():
+            return
+        wh.append(fresh, table)
+        wh.append(
+            fresh.select(_content_digest(key_cols).alias("digest")).distinct(),
+            f"{index_name}__digests",
+        )
+
+    feed = _feed(
+        spark, input_dir, schema_ddl,
+        ts_col=ts_col, watermark=watermark, dedup_cols=[id_col],
+    )
+    return _run_fold(
+        feed,
+        _dedup_and_append,
+        checkpoint_dir,
+        prepare=lambda batch: exact_dedup(
             batch.dropDuplicates([id_col]), key_cols, id_col
-        ).persist()
-        try:
-            if batch.isEmpty():
-                return
-            fresh = incremental_dedup_indexed(
-                wh, batch, key_cols, index_name, update_index=False
-            ).localCheckpoint()
-            if fresh.isEmpty():
-                return
-            wh.append(fresh, table)
-            from gcp_data_pipeline_fyp_spark.operators.dedup import (
-                _content_digest,
-            )
-            from pyspark.sql import functions as SF  # noqa: F401
-
-            wh.append(
-                fresh.select(_content_digest(key_cols).alias("digest"))
-                .distinct(),
-                f"{index_name}__digests",
-            )
-        finally:
-            batch.unpersist()
-
-    return (
-        deduped.writeStream.foreachBatch(_dedup_and_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ).persist(),
     )
 
 
@@ -670,85 +784,71 @@ def stream_neardup_ingest(
         incremental_neardup_indexed,
     )
 
-    if feed_format == "jsonl":
-        raw = spark.readStream.schema(schema_ddl).json(input_dir)
-    elif feed_format == "csv":
-        raw = (
-            spark.readStream.schema(schema_ddl)
-            .option("header", True)
-            .csv(input_dir)
-        )
-    else:
+    if feed_format not in ("csv", "jsonl"):
         raise ValueError(f"unknown feed_format: {feed_format!r}")
-    raw = raw.filter(F.col(id_col).isNotNull())
-    deduped = (
-        raw.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark([id_col])
-    )
 
     def _gate_and_append(batch: DataFrame, batch_id: int) -> None:
-        batch = exact_dedup(
-            batch.dropDuplicates([id_col]), [text_col], id_col
-        ).persist()
-        try:
-            if batch.isEmpty():
-                return
-            fresh = incremental_dedup_indexed(
-                wh, batch, [text_col], index_name, update_index=False
-            ).localCheckpoint()
-            if fresh.isEmpty():
-                return
-            pairs = incremental_neardup_indexed(
-                wh,
-                fresh,
-                id_col,
-                text_col,
-                index_name,
-                num_hashes=num_hashes,
-                bands=bands,
-                shingle_n=shingle_n,
-                update_index=False,
-            )
-            batch_ids = fresh.select(F.col(id_col).alias("__bid"))
-            # every pair involves the batch on >=1 side (operator
-            # contract), and id_a < id_b. If id_b is a batch doc its
-            # partner is either indexed or a smaller batch doc — drop
-            # id_b either way. If id_b is NOT in the batch, id_a is a
-            # batch doc banded with an indexed doc — drop id_a.
-            suppress_b = pairs.join(
-                batch_ids, pairs["id_b"] == batch_ids["__bid"], "left_semi"
-            ).select(F.col("id_b").alias("__drop"))
-            suppress_a = pairs.join(
-                batch_ids, pairs["id_b"] == batch_ids["__bid"], "left_anti"
-            ).select(F.col("id_a").alias("__drop"))
-            drops = suppress_b.unionByName(suppress_a).distinct()
-            survivors = fresh.join(
-                drops, fresh[id_col] == drops["__drop"], "left_anti"
-            ).localCheckpoint()
-            if survivors.isEmpty():
-                return
-            wh.append(survivors, table)
-            wh.append(
-                survivors.select(
-                    _content_digest([text_col]).alias("digest")
-                ).distinct(),
-                f"{index_name}__digests",
-            )
-            wh.append(
-                _lsh_band_rows(
-                    survivors, id_col, text_col, num_hashes, bands, shingle_n
-                ),
-                f"{index_name}__bands",
-                partition_cols=["band"],
-            )
-        finally:
-            batch.unpersist()
+        fresh = incremental_dedup_indexed(
+            wh, batch, [text_col], index_name, update_index=False
+        ).localCheckpoint()
+        if fresh.isEmpty():
+            return
+        pairs = incremental_neardup_indexed(
+            wh,
+            fresh,
+            id_col,
+            text_col,
+            index_name,
+            num_hashes=num_hashes,
+            bands=bands,
+            shingle_n=shingle_n,
+            update_index=False,
+        )
+        batch_ids = fresh.select(F.col(id_col).alias("__bid"))
+        # every pair involves the batch on >=1 side (operator
+        # contract), and id_a < id_b. If id_b is a batch doc its
+        # partner is either indexed or a smaller batch doc — drop
+        # id_b either way. If id_b is NOT in the batch, id_a is a
+        # batch doc banded with an indexed doc — drop id_a.
+        suppress_b = pairs.join(
+            batch_ids, pairs["id_b"] == batch_ids["__bid"], "left_semi"
+        ).select(F.col("id_b").alias("__drop"))
+        suppress_a = pairs.join(
+            batch_ids, pairs["id_b"] == batch_ids["__bid"], "left_anti"
+        ).select(F.col("id_a").alias("__drop"))
+        drops = suppress_b.unionByName(suppress_a).distinct()
+        survivors = fresh.join(
+            drops, fresh[id_col] == drops["__drop"], "left_anti"
+        ).localCheckpoint()
+        if survivors.isEmpty():
+            return
+        wh.append(survivors, table)
+        wh.append(
+            survivors.select(
+                _content_digest([text_col]).alias("digest")
+            ).distinct(),
+            f"{index_name}__digests",
+        )
+        wh.append(
+            _lsh_band_rows(
+                survivors, id_col, text_col, num_hashes, bands, shingle_n
+            ),
+            f"{index_name}__bands",
+            partition_cols=["band"],
+        )
 
-    return (
-        deduped.writeStream.foreachBatch(_gate_and_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    feed = _feed(
+        spark, input_dir, schema_ddl, feed_format=feed_format,
+        not_null_col=id_col, ts_col=ts_col, watermark=watermark,
+        dedup_cols=[id_col],
+    )
+    return _run_fold(
+        feed,
+        _gate_and_append,
+        checkpoint_dir,
+        prepare=lambda batch: exact_dedup(
+            batch.dropDuplicates([id_col]), [text_col], id_col
+        ).persist(),
     )
 
 
@@ -792,26 +892,8 @@ def stream_scd2_ingest(
         scd2_snapshot,
     )
 
-    raw = spark.readStream.schema(schema_ddl).option("header", True)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = (
-        raw.csv(input_dir)
-        .withWatermark(order_col, watermark)
-        # order_col is part of the dedup key: without it, an entity's
-        # SECOND state change inside the watermark would be dropped as
-        # a "duplicate" of its first whenever tiebreak_cols is empty
-        # or non-unique — silent history loss, not dedup
-        .dropDuplicatesWithinWatermark(
-            [*key_cols, order_col, *tiebreak_cols]
-        )
-    )
-
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        cols = [*key_cols, *attr_cols, order_col, *tiebreak_cols]
-        batch = batch.select(*cols)
+        batch = batch.select(*key_cols, *attr_cols, order_col, *tiebreak_cols)
         if wh.exists(dim_table):
             out = scd2_apply(
                 wh.read(dim_table), batch,
@@ -825,12 +907,17 @@ def stream_scd2_ingest(
         wh.overwrite(out, staging)
         wh.swap(staging, dim_table)
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    feed = _feed(
+        spark, input_dir, schema_ddl,
+        max_files_per_trigger=max_files_per_trigger,
+        ts_col=order_col, watermark=watermark,
+        # order_col is part of the dedup key: without it, an entity's
+        # SECOND state change inside the watermark would be dropped as
+        # a "duplicate" of its first whenever tiebreak_cols is empty
+        # or non-unique — silent history loss, not dedup
+        dedup_cols=[*key_cols, order_col, *tiebreak_cols],
     )
+    return _run_fold(feed, _fold, checkpoint_dir)
 
 
 def stream_rollup_ingest(
@@ -851,75 +938,31 @@ def stream_rollup_ingest(
     one `finalize_state` read away and the per-batch work never
     rescans history.
 
-    Count/sum merges are distributive but NOT idempotent — replaying
-    a merged batch double-counts, so unlike the SCD2 fold this needs
-    a replay guard. The guard is `__stream_id` (the checkpoint's
-    persisted query id) + `__last_batch_id`, stamped on every state
-    row and promoted in the SAME staging+swap as the data, so state
-    and mark can never disagree even across a crash mid-promotion.
-    Within one checkpoint lineage foreachBatch re-delivers only the
-    LAST batch, so `batch_id <= max(__last_batch_id)` identifies
-    every already-merged delivery. Batch ids from a DIFFERENT
-    checkpoint (deleted/recreated) are NOT comparable — the source
-    renumbers and re-delivers everything, so silently applying the
-    id guard would both double-count replayed files and DROP files
-    that arrived after the old high-water mark. That case raises
-    instead: rebuild the state table with the new checkpoint, or
-    keep the original checkpoint directory."""
+    Count/sum merges are distributive but NOT idempotent, so unlike
+    the SCD2 fold this carries the state mark (module docstring): a
+    replayed batch is skipped before any merge, and a state table
+    from a different checkpoint lineage raises."""
     from gcp_data_pipeline_fyp_spark.operators.rollup import (
         merge_states,
         rollup_state,
     )
 
-    raw = spark.readStream.schema(schema_ddl).option("header", True)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = raw.csv(input_dir)
-
-    _stream_id = lambda: checkpoint_stream_id(checkpoint_dir)  # noqa: E731
-
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sid = _stream_id()
         part = rollup_state(batch, keys, sum_cols)
-        if wh.exists(state_table):
-            prior = wh.read(state_table)
-            mark = prior.select(
-                F.max("__stream_id").alias("sid"),
-                F.max("__last_batch_id").alias("m"),
-            ).first()
-            if mark["sid"] is not None and mark["sid"] != sid:
-                raise ValueError(
-                    f"rollup state {state_table!r} was built by stream "
-                    f"{mark['sid']} but this checkpoint is {sid}: batch "
-                    "ids are not comparable across checkpoints (every "
-                    "file re-delivers under new numbering). Drop the "
-                    "state table to rebuild it under this checkpoint, "
-                    "or restart from the original checkpoint directory."
-                )
-            if mark["m"] is not None and batch_id <= mark["m"]:
-                return
-            out = merge_states(
-                [prior.drop("__stream_id", "__last_batch_id"), part], keys
-            )
-        else:
-            out = part
-        staging = f"{state_table}__rollup_staging"
-        wh.overwrite(
-            out.withColumn("__stream_id", F.lit(sid)).withColumn(
-                "__last_batch_id", F.lit(batch_id)
-            ),
-            staging,
+        prior, already_merged = _prior_state(
+            wh, state_table, checkpoint_dir, batch_id
         )
-        wh.swap(staging, state_table)
+        if already_merged:
+            return
+        if prior is not None:
+            part = merge_states([prior, part], keys)
+        _promote_state(wh, part, state_table, checkpoint_dir, batch_id)
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    feed = _feed(
+        spark, input_dir, schema_ddl,
+        max_files_per_trigger=max_files_per_trigger,
     )
+    return _run_fold(feed, _fold, checkpoint_dir)
 
 
 def stream_enriched_ingest(
@@ -958,15 +1001,6 @@ def stream_enriched_ingest(
     the at-least-once batch delivery does not double-append
     (the `stream_dedup_ingest` discipline).
     """
-    raw = (
-        spark.readStream.schema(schema_ddl)
-        .option("header", True)
-        .csv(input_dir)
-    )
-    deduped = (
-        raw.withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(event_id_cols)
-    )
 
     def _enrich_and_append(batch: DataFrame, batch_id: int) -> None:
         dim = (
@@ -974,16 +1008,17 @@ def stream_enriched_ingest(
             if dim_versioned
             else wh.read(dim_table)
         )
-        out = batch.dropDuplicates(event_id_cols).join(
-            F.broadcast(dim), join_cols, "left"
-        )
-        wh.append(out, table)
+        wh.append(batch.join(F.broadcast(dim), join_cols, "left"), table)
 
-    return (
-        deduped.writeStream.foreachBatch(_enrich_and_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    feed = _feed(
+        spark, input_dir, schema_ddl,
+        ts_col=ts_col, watermark=watermark, dedup_cols=event_id_cols,
+    )
+    return _run_fold(
+        feed,
+        _enrich_and_append,
+        checkpoint_dir,
+        prepare=lambda batch: batch.dropDuplicates(event_id_cols),
     )
 
 
@@ -1010,13 +1045,10 @@ def stream_drift_monitor(
     rescanning history.
 
     Count folds are distributive but not idempotent, so the state
-    carries the `stream_rollup_ingest` replay guard: (__stream_id,
-    __last_batch_id) stamped in the SAME staging+swap as the counts —
-    a replayed batch is skipped before any merge, and a state table
-    from a different checkpoint lineage raises instead of silently
-    double-counting. The report row appends AFTER the state swap: a
-    crash inside that window loses one observability row, never
-    corrupts counts (the next batch's row reflects the healed state).
+    carries the state mark (module docstring). The report row appends
+    AFTER the state swap: a crash inside that window loses one
+    observability row, never corrupts counts (the next batch's row
+    reflects the healed state).
 
     Scale: per batch, one scan of the batch (map-side-combinable
     count), then profile-sized joins; state and report are
@@ -1027,67 +1059,32 @@ def stream_drift_monitor(
         psi_from_profile,
     )
 
-    raw = spark.readStream.schema(schema_ddl).option("header", True)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = raw.csv(input_dir)
-
-    _stream_id = lambda: checkpoint_stream_id(checkpoint_dir)  # noqa: E731
+    cnt_keys = [*group_cols, "bin"]
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sid = _stream_id()
         profile = wh.read(profile_table)
         part = bin_against_profile(
             batch, profile, value_col, group_cols, n_bins
         )
-        if wh.exists(state_table):
-            prior = wh.read(state_table)
-            mark = prior.select(
-                F.max("__stream_id").alias("sid"),
-                F.max("__last_batch_id").alias("m"),
-            ).first()
-            if mark["sid"] is not None and mark["sid"] != sid:
-                raise ValueError(
-                    f"drift state {state_table!r} was built by stream "
-                    f"{mark['sid']} but this checkpoint is {sid}: batch "
-                    "ids are not comparable across checkpoints. Drop the "
-                    "state table to rebuild it under this checkpoint, or "
-                    "restart from the original checkpoint directory."
-                )
-            if mark["m"] is not None and batch_id <= mark["m"]:
-                return
-            merged = (
-                prior.select(*group_cols, "bin", "cur_cnt")
-                .unionByName(part)
-                .groupBy(*group_cols, "bin")
-                .agg(F.sum("cur_cnt").alias("cur_cnt"))
-            )
-        else:
-            merged = part
-        staging = f"{state_table}__drift_staging"
-        wh.overwrite(
-            merged.withColumn("__stream_id", F.lit(sid)).withColumn(
-                "__last_batch_id", F.lit(batch_id)
-            ),
-            staging,
+        counts, already_merged = _fold_counts(
+            wh, state_table, checkpoint_dir, batch_id, part, cnt_keys, "cur_cnt"
         )
-        wh.swap(staging, state_table)
+        if already_merged:
+            return
+        _promote_state(wh, counts, state_table, checkpoint_dir, batch_id)
         report = psi_from_profile(
             profile,
-            wh.read(state_table).select(*group_cols, "bin", "cur_cnt"),
+            wh.read(state_table).select(*cnt_keys, "cur_cnt"),
             group_cols,
             n_bins,
         ).withColumn("batch_id", F.lit(batch_id))
         wh.append(report, report_table)
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    feed = _feed(
+        spark, input_dir, schema_ddl,
+        max_files_per_trigger=max_files_per_trigger,
     )
+    return _run_fold(feed, _fold, checkpoint_dir)
 
 
 def stream_retrain_monitor(
@@ -1120,12 +1117,9 @@ def stream_retrain_monitor(
     `retrain = psi > threshold`, the streaming rendition of
     `similarity.ivf_retrain_decision`.
 
-    State discipline is `stream_drift_monitor`'s exactly: counts fold
-    via staging+swap stamped with (__stream_id, __last_batch_id), so
-    a replayed batch is skipped before any merge and a state table
-    from a foreign checkpoint lineage raises instead of silently
-    double-counting. The report appends AFTER the swap — a crash in
-    that window loses one observability row, never corrupts counts.
+    The counts carry the state mark (module docstring). The report
+    appends AFTER the swap — a crash in that window loses one
+    observability row, never corrupts counts.
 
     Scale: per batch, one broadcast-codebook assignment scan of the
     batch plus n_centroids-sized math; the training distribution is
@@ -1134,6 +1128,9 @@ def stream_retrain_monitor(
     delimited-string vector column from CSV feeds; pass None when the
     stream already carries array<double> (parquet feeds).
     """
+    from gcp_data_pipeline_fyp_spark.operators.profile import (
+        psi_from_joint_counts,
+    )
     from gcp_data_pipeline_fyp_spark.operators.similarity import _assign
 
     cent = wh.read(f"{index_name}__centroids").select(
@@ -1154,16 +1151,7 @@ def stream_retrain_monitor(
         for r in base_df.collect()  # n_centroids rows — scalar-bounded
     ]
 
-    feed = _vector_feed(
-        spark, input_dir, schema_ddl, vec_sep, max_files_per_trigger
-    )
-
-    _stream_id = lambda: checkpoint_stream_id(checkpoint_dir)  # noqa: E731
-
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sid = _stream_id()
         vecs = batch.select(
             F.col(id_col).alias("corpus_id"),
             _vec_expr(vec_col, vec_sep).alias("__cv")
@@ -1173,37 +1161,13 @@ def stream_retrain_monitor(
             .groupBy("centroid_id")
             .agg(F.count(F.lit(1)).alias("cur_cnt"))
         )
-        if wh.exists(state_table):
-            prior = wh.read(state_table)
-            mark = prior.select(
-                F.max("__stream_id").alias("sid"),
-                F.max("__last_batch_id").alias("m"),
-            ).first()
-            if mark["sid"] is not None and mark["sid"] != sid:
-                raise ValueError(
-                    f"retrain state {state_table!r} was built by stream "
-                    f"{mark['sid']} but this checkpoint is {sid}; drop "
-                    "the state table or restart from the original "
-                    "checkpoint directory."
-                )
-            if mark["m"] is not None and batch_id <= mark["m"]:
-                return
-            merged = (
-                prior.select("centroid_id", "cur_cnt")
-                .unionByName(part)
-                .groupBy("centroid_id")
-                .agg(F.sum("cur_cnt").alias("cur_cnt"))
-            )
-        else:
-            merged = part
-        staging = f"{state_table}__retrain_staging"
-        wh.overwrite(
-            merged.withColumn("__stream_id", F.lit(sid)).withColumn(
-                "__last_batch_id", F.lit(batch_id)
-            ),
-            staging,
+        counts, already_merged = _fold_counts(
+            wh, state_table, checkpoint_dir, batch_id,
+            part, ["centroid_id"], "cur_cnt",
         )
-        wh.swap(staging, state_table)
+        if already_merged:
+            return
+        _promote_state(wh, counts, state_table, checkpoint_dir, batch_id)
         # PSI over the centroid-id mix: training distribution vs the
         # streamed-so-far cumulative — THE shared counts-level algebra
         # (operators/profile.py:psi_from_joint_counts), so this can
@@ -1216,55 +1180,28 @@ def stream_retrain_monitor(
             F.coalesce("__cb", F.lit(0)).alias("__cb"),
             F.coalesce("__cc", F.lit(0)).alias("__cc"),
         )
-        from gcp_data_pipeline_fyp_spark.operators.profile import (
-            psi_from_joint_counts,
+        report = psi_from_joint_counts(pooled, []).select(
+            "n_base",
+            "n_cur",
+            "n_cats",
+            "psi_micro",
+            (F.col("psi_micro") > F.lit(psi_threshold_micro)).alias("retrain"),
         )
+        wh.append(_stamp(report, "batch_id", batch_id), report_table)
 
-        report = (
-            psi_from_joint_counts(pooled, [])
-            .select(
-                "n_base",
-                "n_cur",
-                "n_cats",
-                "psi_micro",
-                (F.col("psi_micro") > F.lit(psi_threshold_micro)).alias(
-                    "retrain"
-                ),
-            )
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        )
-        wh.append(report, report_table)
-
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    feed = _feed(
+        spark, input_dir, schema_ddl, feed_format="parquet" if vec_sep is None else "csv",
+        max_files_per_trigger=max_files_per_trigger,
     )
-
-
-def _vector_feed(
-    spark: SparkSession,
-    input_dir: str,
-    schema_ddl: str,
-    vec_sep: str | None,
-    max_files_per_trigger: int | None,
-):
-    """Streaming source for embedding feeds, keyed off `vec_sep`:
-    a separator means a CSV feed carrying the vector as a delimited
-    string; None means a parquet feed already carrying array<double>
-    (CSV cannot represent arrays — the two options are one choice)."""
-    raw = spark.readStream.schema(schema_ddl)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    if vec_sep is not None:
-        return raw.option("header", True).csv(input_dir)
-    return raw.parquet(input_dir)
+    return _run_fold(feed, _fold, checkpoint_dir)
 
 
 def _vec_expr(vec_col: str, vec_sep: str | None):
-    """The batch-side reading of `vec_sep`: parse the delimited string
-    (CSV feeds) or pass the array column through (parquet feeds)."""
+    """Embedding feeds are keyed off `vec_sep`: a separator means a CSV
+    feed carrying the vector as a delimited string, parsed here; None
+    means a parquet feed already carrying array<double>, passed
+    through (CSV cannot represent arrays — the two options are one
+    choice)."""
     import re as _re
 
     if vec_sep is None:
@@ -1296,11 +1233,11 @@ def stream_index_ingest(
     as soon as their batch lands.
 
     Postings appends are not idempotent, so the fold is guarded by an
-    append-only LEDGER table (batch_id rows, the `_batch_seen`
-    discipline): a replayed batch is skipped before the append. Order
-    matters for the crash window between the two writes: ledger-first
-    would silently DROP a batch whose postings append then crashed;
-    postings-first can only DUPLICATE rows, which
+    append-only LEDGER table (batch_id rows probed with
+    `batch_already_appended`): a replayed batch is skipped before the
+    append. Order matters for the crash window between the two writes:
+    ledger-first would silently DROP a batch whose postings append then
+    crashed; postings-first can only DUPLICATE rows, which
     `similarity.dedup_index_postings` heals (and which queries
     over-recall rather than miss in the meantime) — so postings go
     first, the recoverable failure mode, and the trade-off is stated
@@ -1313,13 +1250,7 @@ def stream_index_ingest(
         append_ivf_index,
     )
 
-    feed = _vector_feed(
-        spark, input_dir, schema_ddl, vec_sep, max_files_per_trigger
-    )
-
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         if batch_already_appended(wh, ledger_table, batch_id, col="batch_id"):
             return
         vecs = batch.select(
@@ -1335,12 +1266,11 @@ def stream_index_ingest(
             ledger_table,
         )
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    feed = _feed(
+        spark, input_dir, schema_ddl, feed_format="parquet" if vec_sep is None else "csv",
+        max_files_per_trigger=max_files_per_trigger,
     )
+    return _run_fold(feed, _fold, checkpoint_dir)
 
 
 def stream_quality_monitor(
@@ -1371,13 +1301,9 @@ def stream_quality_monitor(
     — the model-quality sibling of stream_drift_monitor (input drift)
     and stream_retrain_monitor (index drift).
 
-    Replay discipline is stream_drift_monitor's exactly: counts fold
-    distributively but not idempotently, so (__stream_id,
-    __last_batch_id) ride the SAME staging+swap as the state —
-    replayed batches are skipped before any merge, and a state table
-    from a different checkpoint lineage raises instead of silently
-    double-counting. The report row appends AFTER the swap: a crash
-    in that window loses one observability row, never corrupts state.
+    The state carries the state mark (module docstring). The report
+    row appends AFTER the swap: a crash in that window loses one
+    observability row, never corrupts state.
 
     `auc_binned` treats the bin as the score (within-bin order is
     lost) — the bounded-underestimate contract of ks_binned_report,
@@ -1390,58 +1316,28 @@ def stream_quality_monitor(
         quality_summary_from_state,
     )
 
-    raw = spark.readStream.schema(schema_ddl).option("header", True)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = raw.csv(input_dir)
-
-    _stream_id = lambda: checkpoint_stream_id(checkpoint_dir)  # noqa: E731
+    state_cols = ["bin", "n", "__sv", "__np"]
 
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sid = _stream_id()
         part = calibration_state(batch, score_col, label_col, n_bins, lo, hi)
-        if wh.exists(state_table):
-            prior = wh.read(state_table)
-            mark = prior.select(
-                F.max("__stream_id").alias("sid"),
-                F.max("__last_batch_id").alias("m"),
-            ).first()
-            if mark["sid"] is not None and mark["sid"] != sid:
-                raise ValueError(
-                    f"quality state {state_table!r} was built by stream "
-                    f"{mark['sid']} but this checkpoint is {sid}: batch "
-                    "ids are not comparable across checkpoints. Drop the "
-                    "state table to rebuild it under this checkpoint, or "
-                    "restart from the original checkpoint directory."
-                )
-            if mark["m"] is not None and batch_id <= mark["m"]:
-                return
-            merged = merge_calibration_states(
-                [prior.select("bin", "n", "__sv", "__np"), part]
-            )
-        else:
-            merged = part
-        staging = f"{state_table}__quality_staging"
-        wh.overwrite(
-            merged.withColumn("__stream_id", F.lit(sid)).withColumn(
-                "__last_batch_id", F.lit(batch_id)
-            ),
-            staging,
+        prior, already_merged = _prior_state(
+            wh, state_table, checkpoint_dir, batch_id
         )
-        wh.swap(staging, state_table)
+        if already_merged:
+            return
+        if prior is not None:
+            part = merge_calibration_states([prior.select(*state_cols), part])
+        _promote_state(wh, part, state_table, checkpoint_dir, batch_id)
         report = quality_summary_from_state(
-            wh.read(state_table).select("bin", "n", "__sv", "__np")
+            wh.read(state_table).select(*state_cols)
         ).withColumn("batch_id", F.lit(batch_id))
         wh.append(report, report_table)
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    feed = _feed(
+        spark, input_dir, schema_ddl,
+        max_files_per_trigger=max_files_per_trigger,
     )
+    return _run_fold(feed, _fold, checkpoint_dir)
 
 
 def stream_match_ingest(
@@ -1486,15 +1382,12 @@ def stream_match_ingest(
     two batches whose rate moved monotonically (hash rule nesting) —
     not globally.
 
-    Replay discipline is stream_rollup_ingest's: count sums fold
-    distributively but not idempotently, so (__stream_id,
-    __last_batch_id) ride the state's staging+swap; a replayed batch
-    skips the merge, and the keeper append is separately guarded by a
-    batch_id probe of `out_table` itself (a crash between append and
-    swap re-delivers into a no-op append, never duplicate rows; an
-    all-dropped batch re-appends nothing, harmlessly). A state table
-    from a different checkpoint lineage raises instead of silently
-    double-counting.
+    Replay: the profile state carries the state mark, and the keeper
+    append is an append ledger of `out_table` itself (module
+    docstring). A replayed batch skips the merge but recomputes its
+    keepers from the already-merged profile, so a crash between append
+    and swap re-delivers into a no-op append, never duplicate rows (an
+    all-dropped batch re-appends nothing, harmlessly).
 
     Scale: state is |buckets| rows; rates are |buckets| rows
     (broadcast join onto the batch); per-batch work is one batch-
@@ -1513,48 +1406,13 @@ def stream_match_ingest(
         .localCheckpoint(eager=True)
     )
 
-    raw = spark.readStream.schema(schema_ddl).option("header", True)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = raw.csv(input_dir)
-
-    _stream_id = lambda: checkpoint_stream_id(checkpoint_dir)  # noqa: E731
-    _batch_seen = lambda t, b: batch_already_appended(wh, t, b)  # noqa: E731
-
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sid = _stream_id()
         bc = batch.groupBy(F.col(bucket_col).alias("bucket")).agg(
             F.count(F.lit(1)).alias("n_src")
         )
-        already_merged = False
-        if wh.exists(state_table):
-            prior = wh.read(state_table)
-            mark = prior.select(
-                F.max("__stream_id").alias("sid"),
-                F.max("__last_batch_id").alias("m"),
-            ).first()
-            if mark["sid"] is not None and mark["sid"] != sid:
-                raise ValueError(
-                    f"match state {state_table!r} was built by stream "
-                    f"{mark['sid']} but this checkpoint is {sid}: batch "
-                    "ids are not comparable across checkpoints. Drop the "
-                    "state table to rebuild it under this checkpoint, or "
-                    "restart from the original checkpoint directory."
-                )
-            already_merged = mark["m"] is not None and batch_id <= mark["m"]
-            if already_merged:
-                merged = prior.select("bucket", "n_src")
-            else:
-                merged = (
-                    prior.select("bucket", "n_src")
-                    .unionByName(bc)
-                    .groupBy("bucket")
-                    .agg(F.sum("n_src").alias("n_src"))
-                )
-        else:
-            merged = bc
+        merged, already_merged = _fold_counts(
+            wh, state_table, checkpoint_dir, batch_id, bc, ["bucket"], "n_src"
+        )
         rates = match_rates_from_counts(merged, ref_counts)
         r = F.broadcast(
             rates.select(F.col("bucket").alias("__mb"), "rate_micro")
@@ -1564,27 +1422,15 @@ def stream_match_ingest(
             .filter(hash_bucket(key_cols, seed) < F.col("rate_micro"))
             .drop("__mb", "rate_micro")
         )
-        if not _batch_seen(out_table, batch_id):
-            wh.append(
-                kept.withColumn("__batch_id", F.lit(batch_id).cast("long")),
-                out_table,
-            )
+        _append_once(wh, kept, out_table, batch_id, "__batch_id")
         if not already_merged:
-            staging = f"{state_table}__match_staging"
-            wh.overwrite(
-                merged.withColumn("__stream_id", F.lit(sid)).withColumn(
-                    "__last_batch_id", F.lit(batch_id)
-                ),
-                staging,
-            )
-            wh.swap(staging, state_table)
+            _promote_state(wh, merged, state_table, checkpoint_dir, batch_id)
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    feed = _feed(
+        spark, input_dir, schema_ddl,
+        max_files_per_trigger=max_files_per_trigger,
     )
+    return _run_fold(feed, _fold, checkpoint_dir)
 
 
 def stream_dsir_ingest(
@@ -1629,13 +1475,9 @@ def stream_dsir_ingest(
     threshold gate is used rather than top-k because k-of-stream is
     not computable online without history rescans.
 
-    Replay discipline is stream_match_ingest's: count sums fold
-    distributively but not idempotently, so (__stream_id,
-    __last_batch_id) ride the state's staging+swap; a replayed batch
-    skips the merge, and the keeper append is separately guarded by a
-    batch_id probe of `out_table` itself. A state table from a
-    different checkpoint lineage raises instead of silently
-    double-counting.
+    Replay is stream_match_ingest's: the raw-profile state carries the
+    state mark and the keeper append is an append ledger of
+    `out_table` itself (module docstring).
 
     Scale: state is <= n_buckets rows; the ratio table is broadcast
     by construction; per-batch work is one batch-sized explode +
@@ -1673,46 +1515,11 @@ def stream_dsir_ingest(
             "— rename those columns; the ingest appends its own."
         )
 
-    raw = spark.readStream.schema(schema_ddl).option("header", True)
-    if max_files_per_trigger is not None:
-        raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = raw.csv(input_dir)
-
-    _stream_id = lambda: checkpoint_stream_id(checkpoint_dir)  # noqa: E731
-    _batch_seen = lambda t, b: batch_already_appended(wh, t, b)  # noqa: E731
-
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        sid = _stream_id()
         bc = bucket_profile(batch, text_col, nb)
-        already_merged = False
-        if wh.exists(state_table):
-            prior = wh.read(state_table)
-            mark = prior.select(
-                F.max("__stream_id").alias("sid"),
-                F.max("__last_batch_id").alias("m"),
-            ).first()
-            if mark["sid"] is not None and mark["sid"] != sid:
-                raise ValueError(
-                    f"dsir state {state_table!r} was built by stream "
-                    f"{mark['sid']} but this checkpoint is {sid}: batch "
-                    "ids are not comparable across checkpoints. Drop the "
-                    "state table to rebuild it under this checkpoint, or "
-                    "restart from the original checkpoint directory."
-                )
-            already_merged = mark["m"] is not None and batch_id <= mark["m"]
-            if already_merged:
-                merged = prior.select("bucket", "c")
-            else:
-                merged = (
-                    prior.select("bucket", "c")
-                    .unionByName(bc)
-                    .groupBy("bucket")
-                    .agg(F.sum("c").alias("c"))
-                )
-        else:
-            merged = bc
+        merged, already_merged = _fold_counts(
+            wh, state_table, checkpoint_dir, batch_id, bc, ["bucket"], "c"
+        )
         ratios = dsir_log_ratios(merged, tgt_prof, nb)
         w = score_against_ratios(batch, id_col, ratios, text_col, nb)
         kept = batch.join(
@@ -1720,24 +1527,12 @@ def stream_dsir_ingest(
             id_col,
             "inner",
         )
-        if not _batch_seen(out_table, batch_id):
-            wh.append(
-                kept.withColumn("__batch_id", F.lit(batch_id).cast("long")),
-                out_table,
-            )
+        _append_once(wh, kept, out_table, batch_id, "__batch_id")
         if not already_merged:
-            staging = f"{state_table}__dsir_staging"
-            wh.overwrite(
-                merged.withColumn("__stream_id", F.lit(sid)).withColumn(
-                    "__last_batch_id", F.lit(batch_id)
-                ),
-                staging,
-            )
-            wh.swap(staging, state_table)
+            _promote_state(wh, merged, state_table, checkpoint_dir, batch_id)
 
-    return (
-        feed.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    feed = _feed(
+        spark, input_dir, schema_ddl,
+        max_files_per_trigger=max_files_per_trigger,
     )
+    return _run_fold(feed, _fold, checkpoint_dir)

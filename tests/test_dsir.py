@@ -465,3 +465,9 @@ def test_fused_profile_build_matches_two_frame_fit(spark, tmp_path):
         build_dsir_profiles(wh, d, d, "BAD", target_filter=F.lit(True))
     with _pt.raises(ValueError):
         build_dsir_profiles(wh, d, None, "BAD")
+    # the fused pass tokenizes text_col for both profiles, so a separate
+    # target column cannot apply there; it raises instead of being ignored
+    with _pt.raises(ValueError, match="target_text_col"):
+        build_dsir_profiles(wh, d, None, "BAD", target_text_col="lang",
+                            target_filter=F.col("lang") == "en")
+    assert not wh.exists("BAD__raw_profile")
